@@ -2,8 +2,8 @@
 """Benchmark: headline queries + flagship extraction throughput.
 
 Default: runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] (default 32) and prints ONE COMPACT JSON line as
-the last stdout line:
+local[$SPARK_GRAFT_CPUS] (default: the host's core count) and prints ONE
+COMPACT JSON line as the last stdout line:
   {"metric": ..., "value": <total sec>, "unit": "sec", "n_queries": ...,
    "queries": {"flagship_extract": sec}, "sf": ..., "turns_per_sec": ...,
    "detail_file": "BENCH/bench_detail_sf<sf>_cpus<n>.json"}
@@ -48,7 +48,7 @@ sys.path.insert(0, REPO_ROOT)
 os.environ["PYTHONPATH"] = REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def _sf_number(sf_dir: str) -> float:

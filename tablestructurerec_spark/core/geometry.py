@@ -12,6 +12,7 @@ Quad convention: 4x2 clockwise from top-left ("box_4_2").
 
 from __future__ import annotations
 
+import itertools
 from typing import List, Optional, Sequence, Set, Tuple
 
 import numpy as np
@@ -206,6 +207,71 @@ def gather_ocr_rows(ocr_items: list, threshold: float = 0.2) -> list:
     return [x for x in ocr_items if x]
 
 
+def _overlap_pairs(a: np.ndarray, b: np.ndarray):
+    """Pairs of rows of the ``(n, 4)`` box arrays ``a`` and ``b`` that are not
+    strictly disjoint (touching edges count as overlapping), with the pair
+    terms of :func:`box_iou` / :func:`contained_side` in NumPy arithmetic.
+
+    Returns ``(i, j, iou, ratio_a, ratio_b)``, pairs in no particular order;
+    ``ratio_*`` is the share of that box's area outside the intersection (0
+    for zero-area boxes).  Candidates come from a sort, not an n x m scan:
+    along the axis that yields fewer of them, each ``a`` row takes the ``b``
+    rows whose low edge lies in ``[lo - widest - slack, hi]`` (a superset of
+    those meeting ``[lo, hi]``; the slack absorbs the rounding of ``lo -
+    widest``), then the exact disjointness test filters them.  Rows with a
+    non-finite coordinate have no place on the axis and are paired with
+    every row of the other side.  Candidates are tested in chunks of at most
+    ``2**20`` pairs, so memory stays flat when the windows degenerate.
+    """
+    fin_a, fin_b = np.isfinite(a).all(axis=1), np.isfinite(b).all(axis=1)
+    b_fin, b_rest = np.nonzero(fin_b)[0], np.nonzero(~fin_b)[0]
+    with np.errstate(all="ignore"):
+        windows = []
+        for k in (0, 1):
+            lo_b = b[b_fin, k]
+            order = np.argsort(lo_b, kind="stable")
+            widest = float(np.max(b[b_fin, k + 2] - lo_b, initial=0.0))
+            lo = a[:, k] - widest
+            start = np.searchsorted(lo_b[order], lo - 1e-9 * (np.abs(lo) + widest))
+            stop = np.searchsorted(lo_b[order], a[:, k + 2], side="right")
+            start[~fin_a], stop[~fin_a] = 0, len(b_fin)
+            windows.append((np.maximum(stop - start, 0), start, b_fin[order]))
+        windows = [min(windows, key=lambda w: int(w[0].sum()))]
+        if len(b_rest):
+            n_rest = np.full(len(a), len(b_rest))
+            windows.append((n_rest, np.zeros(len(a), dtype=int), b_rest))
+        pair_i, pair_j = [], []
+        for counts, start, cols in windows:
+            ends = np.cumsum(counts)
+            s = 0
+            while s < len(a):
+                budget = ends[s] - counts[s] + (1 << 20)
+                e = max(s + 1, int(np.searchsorted(ends, budget, "right")))
+                c = counts[s:e]
+                ii = np.repeat(np.arange(s, e), c)
+                offset = np.repeat(start[s:e] - (np.cumsum(c) - c), c)
+                jj = cols[offset + np.arange(int(c.sum()))]
+                ax0, ay0, ax1, ay1 = a[ii].T
+                bx0, by0, bx1, by1 = b[jj].T
+                keep = ~((ax1 < bx0) | (ax0 > bx1) | (ay1 < by0) | (ay0 > by1))
+                pair_i.append(ii[keep])
+                pair_j.append(jj[keep])
+                s = e
+        ii, jj = np.concatenate(pair_i), np.concatenate(pair_j)
+        ax0, ay0, ax1, ay1 = a[ii].T
+        bx0, by0, bx1, by1 = b[jj].T
+        iw = np.maximum(np.minimum(ax1, bx1) - np.maximum(ax0, bx0), 0.0)
+        ih = np.maximum(np.minimum(ay1, by1) - np.maximum(ay0, by0), 0.0)
+        inter = iw * ih
+        area_a = (ax1 - ax0) * (ay1 - ay0)
+        area_b = (bx1 - bx0) * (by1 - by0)
+        union = area_a + area_b - inter
+        iou = np.where(union == 0, 1.0, inter / union)
+        ratio_a = np.where(area_a > 0, (area_a - inter) / area_a, 0.0)
+        ratio_b = np.where(area_b > 0, (area_b - inter) / area_b, 0.0)
+    return ii, jj, iou, ratio_a, ratio_b
+
+
 def duplicate_box_indices(boxes: Sequence[Sequence[float]]) -> Set[int]:
     """Indices of boxes to drop as duplicates (keep-first semantics).
 
@@ -217,64 +283,23 @@ def duplicate_box_indices(boxes: Sequence[Sequence[float]]) -> Set[int]:
     """
     dropped: Set[int] = set()
     n = len(boxes)
-    if n < 2:
-        return dropped
     if n <= 64:
-        # small tables: the direct reference scan
-        for i in range(n):
-            if i in dropped:
-                continue
-            for j in range(i + 1, n):
-                if j in dropped:
-                    continue
-                if box_iou(boxes[i], boxes[j]) > 0.8:
-                    dropped.add(j)
-                    continue
-                side = contained_side(boxes[i], boxes[j])
-                if side == 2:
-                    dropped.add(j)
-                elif side == 1:
-                    dropped.add(i)
-        return dropped
-
-    # Large tables: pairs where neither predicate fires can never change the
-    # scan's state, so precompute the candidate pairs with blocked numpy
-    # (identical arithmetic to box_iou / contained_side) and replay the exact
-    # sequential keep-first logic over candidates only — O(N²) vectorized ops
-    # + O(|overlapping pairs|) python, instead of O(N²) python calls.
-    b = np.asarray([list(x[:4]) for x in boxes], dtype=float)
-    x0, y0, x1, y1 = b[:, 0], b[:, 1], b[:, 2], b[:, 3]
-    cand_i: list = []
-    cand_j: list = []
-    block = max(1, 4_000_000 // n)
-    for s in range(0, n, block):
-        e = min(s + block, n)
-        ax0, ay0, ax1, ay1 = (v[s:e][:, None] for v in (x0, y0, x1, y1))
-        bx0, by0, bx1, by1 = (v[None, :] for v in (x0, y0, x1, y1))
-        iw = np.minimum(ax1, bx1) - np.maximum(ax0, bx0)
-        ih = np.minimum(ay1, by1) - np.maximum(ay0, by0)
-        inter = np.maximum(iw, 0.0) * np.maximum(ih, 0.0)
-        area_a = (ax1 - ax0) * (ay1 - ay0)
-        area_b = (bx1 - bx0) * (by1 - by0)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            union = area_a + area_b - inter
-            iou = np.where(union == 0, 1.0, inter / union)
-            ratio_a = np.where(area_a > 0, (area_a - inter) / area_a, 0.0)
-            ratio_b = np.where(area_b > 0, (area_b - inter) / area_b, 0.0)
-        cand = (iou > 0.8) | (ratio_a < 0.2) | (ratio_b < 0.2)
-        ii, jj = np.nonzero(cand)
-        ii = ii + s
-        keep = ii < jj  # pairwise scan visits i < j only
-        cand_i.append(ii[keep])
-        cand_j.append(jj[keep])
-    ii = np.concatenate(cand_i)
-    jj = np.concatenate(cand_j)
-    order = np.lexsort((jj, ii))  # scan order: i ascending, then j ascending
+        # small tables: every pair, in the reference's scan order
+        pairs = itertools.combinations(range(n), 2)
+    else:
+        # a pair where neither predicate fires (a disjoint one included)
+        # never changes the scan's state: replay only the overlapping pairs
+        # that pass the vectorised predicate, in scan order
+        b = np.asarray([list(x[:4]) for x in boxes], dtype=float)
+        ii, jj, iou, ratio_a, ratio_b = _overlap_pairs(b, b)
+        keep = (ii < jj) & ((iou > 0.8) | (ratio_a < 0.2) | (ratio_b < 0.2))
+        ii, jj = ii[keep], jj[keep]
+        order = np.lexsort((jj, ii))
+        pairs = zip(ii[order].tolist(), jj[order].tolist())
     # the reference checks `i in dropped` only when the OUTER loop reaches i:
     # an i dropped mid-scan keeps processing its remaining pairs — replay that
     cur_i, skip_i = -1, False
-    for k in order:
-        i, j = int(ii[k]), int(jj[k])
+    for i, j in pairs:
         if i != cur_i:
             cur_i, skip_i = i, i in dropped
         if skip_i or j in dropped:
@@ -298,6 +323,12 @@ def match_ocr_to_cells(ocr_rows: list, cell_quads) -> Tuple[dict, list]:
     (``contained_side(ocr, cell, 0.6) == 1``) or box-IoU > 0.8.  Returns
     ``(cell_idx -> [ocr_row...]`` in scan order, ``unmatched ocr_rows)``.
 
+    Up to 1,024 fragment x cell pairs the pairs are scanned in plain Python;
+    above that, only the pairs :func:`_overlap_pairs` finds by sorting are
+    tested, with the same predicate in NumPy arithmetic.  Both give the same
+    result on finite coordinates; a pair with a non-finite coordinate follows
+    NumPy semantics above the threshold.
+
     Contract: ref utils_table_recover.py:378-406.  The reference appends to
     its unmatched list once per *non-matching pair* (a quirk it never reads —
     only len-logs); we normalize to one entry per never-matched fragment and
@@ -312,9 +343,9 @@ def match_ocr_to_cells(ocr_rows: list, cell_quads) -> Tuple[dict, list]:
     if n_ocr * n_cells <= 1024:
         # small-table fast path: identical IEEE arithmetic in plain python —
         # the vectorized kernel's fixed overhead (array building, errstate,
-        # argsort) dominates at typical per-turn sizes (<=5 cells x ~12
+        # sorts) dominates at typical per-turn sizes (<=5 cells x ~12
         # fragments); measured ~3x on the flagship corpus.  Per-cell lists
-        # stay in OCR scan order, as the blocked path's stable sort produces.
+        # stay in OCR scan order, as the sorted path's lexsort produces.
         for i in range(n_ocr):
             r = ocr_rows[i]
             ox0, oy0 = r[0][0]
@@ -341,49 +372,16 @@ def match_ocr_to_cells(ocr_rows: list, cell_quads) -> Tuple[dict, list]:
                 unmatched.append(r)
         return matched, unmatched
 
-    # vectorized pair predicate (hot path: F×C per table); identical math to
-    # contained_side(..., 0.6) == 1 or box_iou(...) > 0.8 above.  The OCR
-    # side is processed in blocks so peak memory stays ~tens of MB: a dense
-    # F×C float matrix set is ~15 × 8·F·C bytes, and on fresh pages the
-    # first-touch cost alone made a 4800² table take 38 s (measured) — the
-    # blocked version is identical math at a flat memory footprint.
-    ob = np.asarray(
-        [(r[0][0][0], r[0][0][1], r[0][2][0], r[0][2][1]) for r in ocr_rows], dtype=float
-    )
-    cb = np.asarray(
-        [(c[0][0], c[0][1], c[2][0], c[2][1]) for c in cell_quads], dtype=float
-    )
-    cx0, cy0, cx1, cy1 = (cb[:, k][None, :] for k in range(4))
-    area_c = (cx1 - cx0) * (cy1 - cy0)
-
-    pair_i: list = []
-    pair_j: list = []
-    block = max(1, 4_000_000 // max(n_cells, 1))
-    any_hit = np.zeros(n_ocr, dtype=bool)
-    for s in range(0, n_ocr, block):
-        e = min(s + block, n_ocr)
-        ox0, oy0, ox1, oy1 = (ob[s:e, k][:, None] for k in range(4))
-        overlap = ~((ox1 < cx0) | (ox0 > cx1) | (oy1 < cy0) | (oy0 > cy1))
-        iw = np.maximum(np.minimum(ox1, cx1) - np.maximum(ox0, cx0), 0.0)
-        ih = np.maximum(np.minimum(oy1, cy1) - np.maximum(oy0, cy0), 0.0)
-        inter = iw * ih
-        area_o = (ox1 - ox0) * (oy1 - oy0)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out_ratio = np.where(area_o > 0, (area_o - inter) / area_o, 0.0)
-            union = area_o + area_c - inter
-            iou = np.where(union == 0, 1.0, inter / union)
-        hits = overlap & ((out_ratio < 0.6) | (iou > 0.8))
-        ii, jj = np.nonzero(hits)
-        pair_i.append(ii + s)
-        pair_j.append(jj)
-        any_hit[s:e] = hits.any(axis=1)
-
-    ii = np.concatenate(pair_i) if pair_i else np.zeros(0, dtype=int)
-    jj = np.concatenate(pair_j) if pair_j else np.zeros(0, dtype=int)
-    # group by cell, preserving OCR scan order within each cell (stable sort)
-    order = np.argsort(jj, kind="stable")
-    for k in order:
+    ob = np.asarray([quad_to_box(r[0]) for r in ocr_rows], dtype=float)
+    cb = np.asarray([quad_to_box(c) for c in cell_quads], dtype=float)
+    ii, jj, iou, out_ratio, _ = _overlap_pairs(ob, cb)
+    hits = (out_ratio < 0.6) | (iou > 0.8)
+    ii, jj = ii[hits], jj[hits]
+    # group by cell, keeping OCR scan order within each cell
+    for k in np.lexsort((ii, jj)):
         matched.setdefault(int(jj[k]), []).append(ocr_rows[int(ii[k])])
+    any_hit = np.zeros(n_ocr, dtype=bool)
+    any_hit[ii] = True
     unmatched = [ocr_rows[i] for i in np.nonzero(~any_hit)[0]]
     return matched, unmatched
 

@@ -76,8 +76,10 @@ def _classify_and_recover(logic_points: List[List[int]]):
     ):
         return "wireless", None
     quads = np.asarray(quads_from_logic_points(logic_points), dtype=float)
-    recovered = recover_logic_points(quads)
-    if recovered.tolist() != [list(map(int, lp)) for lp in logic_points]:
+    # Python ints, not NumPy scalars: the cell records and the renderer
+    # index and format every span, ~10x slower on NumPy scalars
+    recovered = recover_logic_points(quads).tolist()
+    if recovered != [list(map(int, lp)) for lp in logic_points]:
         return "wireless", None
     return "wired", recovered
 

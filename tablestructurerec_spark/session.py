@@ -35,7 +35,7 @@ def get_spark(
     mid-iteration then costs a re-read, not a job failure.  Local bench
     leaves it unset and keeps the cheaper ``localCheckpoint``."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus * 2, 8)
     if checkpoint_dir is None:

@@ -75,20 +75,22 @@ def test_poisoned_fragment_degrades_in_spark_stage(spark):
 
 
 def test_large_legit_table_processes_correctly():
-    """A 60x40 (2400-cell) table goes through the full kernel and round-trips
-    (regression for the dense-pair-matrix memory blowup in OCR matching)."""
+    """A 60x40 (2,400-cell) and an 80x80 (6,400-cell) table go through the
+    full kernel and round-trip (regression for the dense-pair-matrix memory
+    blowup in OCR matching)."""
     from tablestructurerec_spark.core.html_parse import parse_table_html
     from tablestructurerec_spark.core.pipeline import process_table_html
 
-    rows = [
-        "<tr>" + "".join(f"<td>r{r}c{c}</td>" for c in range(40)) + "</tr>"
-        for r in range(60)
-    ]
-    out = process_table_html("<table>" + "".join(rows) + "</table>", 0)
-    assert out is not None and out["n_cells"] == 2400
-    logic, texts = parse_table_html(out["pred_html"])
-    assert len(logic) == 2400
-    assert texts[0] == ["r0c0"] and texts[-1] == ["r59c39"]
+    for n_rows, n_cols in [(60, 40), (80, 80)]:
+        rows = [
+            "<tr>" + "".join(f"<td>r{r}c{c}</td>" for c in range(n_cols)) + "</tr>"
+            for r in range(n_rows)
+        ]
+        out = process_table_html("<table>" + "".join(rows) + "</table>", 0)
+        assert out is not None and out["n_cells"] == n_rows * n_cols
+        logic, texts = parse_table_html(out["pred_html"])
+        assert logic == [[r, r, c, c] for r in range(n_rows) for c in range(n_cols)]
+        assert texts == [[f"r{r}c{c}"] for r in range(n_rows) for c in range(n_cols)]
 
 
 def test_extraction_plans_tolerate_null_columns(spark):
