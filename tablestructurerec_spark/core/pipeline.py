@@ -61,11 +61,14 @@ def classify_table_kind(logic_points: List[List[int]]) -> str:
     classifier — deterministic and runtime-computable, since in this graft
     the quads derive from the parsed grid.
     """
-    return _classify_and_recover(logic_points)[0]
+    return _classify_and_recover(logic_points, quads_from_logic_points(logic_points))[0]
 
 
-def _classify_and_recover(logic_points: List[List[int]]):
-    """(kind, recovered logic or None) — recover computed at most once."""
+def _classify_and_recover(
+    logic_points: List[List[int]], ccw_quads: List[List[List[float]]]
+):
+    """(kind, recovered logic or None) — recover computed at most once;
+    ``ccw_quads`` are the detector quads of ``logic_points``."""
     if not logic_points:
         return "wireless", None
     n_rows = max(lp[1] for lp in logic_points) + 1
@@ -75,7 +78,7 @@ def _classify_and_recover(logic_points: List[List[int]]):
         or len({lp[2] for lp in logic_points}) < n_cols
     ):
         return "wireless", None
-    quads = np.asarray(quads_from_logic_points(logic_points), dtype=float)
+    quads = np.asarray(ccw_quads, dtype=float)
     # Python ints, not NumPy scalars: the cell records and the renderer
     # index and format every span, ~10x slower on NumPy scalars
     recovered = recover_logic_points(quads).tolist()
@@ -176,7 +179,7 @@ def process_table_html(
 
     # detector stand-in: ccw physical quads from the logical grid
     ccw_quads = quads_from_logic_points(parsed_logic)
-    kind, recovered = _classify_and_recover(parsed_logic)
+    kind, recovered = _classify_and_recover(parsed_logic, ccw_quads)
     if kind == "wired":
         logic = recovered
     else:

@@ -92,7 +92,7 @@ def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 # per-table degradation, as the reference degrades per image
                 # (ref lineless_table_rec/main.py:132-134) — one poisoned
                 # fragment must not fail a 10^12-turn job; the error column
-                # feeds the lineage/metrics tables
+                # records why (no lineage/metrics table counts it yet)
                 try:
                     res = process_table_html(html, _table_seed(conv_id, turn_idx, ti))
                     err = None

@@ -97,3 +97,26 @@ def test_native_strip_crlf_parity(spark):
     got = [r.out for r in df.select(strip_boilerplate_col(F.col("text")).alias("out")).collect()]
     want = [strip_boilerplate(c) for c in cases]
     assert got == want
+
+
+def test_zip_stat_check_installed_in_workers_only(spark):
+    """Importing the package in a Python worker installs the zipimport stat
+    check (see ``tablestructurerec_spark._install_zip_stat_check``); the
+    driver keeps the stdlib method."""
+    import zipimport
+
+    def report(batches):
+        import zipimport
+
+        import pandas as pd
+
+        import tablestructurerec_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        checked = getattr(zipimport.zipimporter.invalidate_caches, "_stat_checked", False)
+        yield pd.DataFrame({"checked": [checked]})
+
+    rows = spark.range(2, numPartitions=2).mapInPandas(report, "checked boolean").collect()
+    assert [r.checked for r in rows] == [True, True]
+    assert not getattr(zipimport.zipimporter.invalidate_caches, "_stat_checked", False)
